@@ -281,7 +281,7 @@ def q_overlap_selective_algorithms(spark: SparkSession, sf_dir: str) -> DataFram
 def q_overlap_small_build_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the index algorithm's design point (reference CollectLeft mode):
     # small build side broadcast as per-key sorted arrays, large probe
-    # streamed through mapInPandas with zero shuffle
+    # streamed through mapInArrow with zero shuffle
     build = _targets(spark, sf_dir).where(F.col("t_id") % 101 == 0)
     probe = _reads(spark, sf_dir, with_id=False)
     oj = overlap_join(

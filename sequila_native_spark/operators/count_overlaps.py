@@ -16,9 +16,9 @@ Algorithms:
     the probe so zero-match rows survive. All Catalyst; shuffles on
     ``(keys…, bin)`` then on the probe id.
 
-``index`` — broadcast per-key sorted arrays; a ``mapInArrow`` probe (pandas
-    fallback for multi-key / exotic key types) computes exact counts with
-    two binary searches per probe (the superintervals ``count`` recipe,
+``index`` — broadcast per-key sorted arrays (any number of equi-keys); a
+    ``mapInArrow`` probe computes exact counts with two binary searches per
+    probe (the superintervals ``count`` recipe,
     ``superintervals/src/superintervals.rs:353-446``). Zero shuffle; probe
     rows stream through unchanged with a count column appended. O(n log m)
     with no per-candidate materialization — inverted intervals (start > end
@@ -37,35 +37,28 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    AtomicType,
-    BooleanType,
-    ByteType,
-    IntegerType,
-    LongType,
-    ShortType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
-from sequila_native_spark.operators.interval_join import (
+from sequila_native_spark.operators.index import (
     _LE,
     _LS,
     _RE,
     _RS,
     BuildSideTooLargeError,
+    bounds_of,
+    collect_index,
+    index_keys_ok,
+    key_groups,
+)
+from sequila_native_spark.operators.interval_join import (
     _binned_pairs,
     _probe_spans,
     _with_bounds,
     compact_index_arrays,
-    guarded_build_pandas,
     resolve_bin_width,
 )
 from sequila_native_spark.util import stamp_row_id
@@ -106,7 +99,8 @@ def count_overlaps(
     which overlaps count — evaluated on the closed input intervals
     (incompatible with ``strict``); the ``index`` algorithm routes to
     ``binning`` when fractions are requested (the count kernel's two binary
-    searches answer plain overlap only).
+    searches answer plain overlap only) and when the two sides' key types
+    differ in family (only Catalyst's coerced join matches ``1`` to ``'1'``).
     """
     wants_frac = (
         min_frac_left is not None or min_frac_right is not None
@@ -139,7 +133,9 @@ def count_overlaps(
 
     lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
 
-    if algo == "index" and wants_frac:
+    if algo == "index" and (
+        wants_frac or not index_keys_ok(left, right_orig, l_keys, r_keys)
+    ):
         algo = "binning"
 
     if algo == "index":
@@ -177,17 +173,6 @@ def count_overlaps(
         )
 
     raise AssertionError(f"unreachable algorithm {algo}")
-
-
-def _build_count_entry(
-    starts: np.ndarray, ends: np.ndarray, entry_from_sorted=None
-) -> tuple:
-    """One key group's index entry from unsorted arrays (pandas build
-    path): sort by start, then apply the entry factory (default
-    :func:`_entry_from_sorted`; coverage passes its own)."""
-    fn = entry_from_sorted or _entry_from_sorted
-    order = np.argsort(starts, kind="stable")
-    return fn(starts[order], ends[order])
 
 
 def _as_dtype(v: np.ndarray, dt) -> np.ndarray:
@@ -263,17 +248,6 @@ def _mask_counts(
     return np.zeros(len(qs), dtype=np.int64)
 
 
-def _arrow_simple_key(dt) -> bool:
-    """True when a key of this Spark type round-trips through Arrow
-    ``.as_py()`` to the same hashable python value that the pandas groupby
-    path produces (str/int/bool families). Timestamps/decimals/etc. keep
-    the pandas path so mixed build/probe paths can never disagree on the
-    dict key representation."""
-    return isinstance(
-        dt, (StringType, IntegerType, LongType, ShortType, ByteType, BooleanType)
-    )
-
-
 def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple:
     """Count-index entry from arrays already sorted by start.
 
@@ -295,98 +269,6 @@ def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple
     return compact_index_arrays(reg_s, reg_e, np.sort(reg_e), inv_s, inv_e)
 
 
-def _build_count_index(
-    lb: DataFrame, l_keys, *, single_job: bool = False,
-    use_arrow: bool = False, entry_from_sorted=None,
-) -> dict[tuple, tuple]:
-    """Collect the build side (guarded) into per-key index entries
-    (``entry_from_sorted`` is the per-group factory; default
-    :func:`_entry_from_sorted`, the count kernel's).
-
-    ``single_job=True``: collect through ``limit(cap+1)`` — the limit caps
-    the driver materialization at cap+1 rows whatever the true build size,
-    so one bounded job replaces guarded_build_pandas' count-probe + collect
-    pair (each a full evaluation of the build projection).
-
-    ``use_arrow=True`` (0/1 simple key only): collect with ``toArrow`` and
-    group via dictionary codes + one lexsort — no per-row python string
-    objects, no pandas groupby. Measured 10.9 s → ~3 s on a 7.5M-row build
-    (guide §4.2: hand whole batches to vectorized native code).
-    """
-    entry_fn = entry_from_sorted or _entry_from_sorted
-    if use_arrow and single_job and len(l_keys) <= 1:
-        from sequila_native_spark.session import SequilaConf
-
-        cap = SequilaConf.from_spark(lb.sparkSession).max_broadcast_build_rows
-        if cap is not None and cap > 0:
-            tbl = lb.limit(cap + 1).toArrow()
-            if tbl.num_rows > cap:
-                raise BuildSideTooLargeError(
-                    f"build side has more than {cap} rows; broadcast-index "
-                    f"collect would risk a driver OOM."
-                )
-        else:
-            tbl = lb.toArrow()
-        ok = pc.and_(pc.is_valid(tbl[_LS]), pc.is_valid(tbl[_LE]))
-        if l_keys:
-            ok = pc.and_(ok, pc.is_valid(tbl[l_keys[0]]))
-        if tbl.num_rows and not pc.all(ok).as_py():
-            tbl = tbl.filter(ok)
-        index: dict[tuple, tuple] = {}
-        if tbl.num_rows == 0:
-            return index
-        starts = tbl[_LS].combine_chunks().to_numpy()
-        ends = tbl[_LE].combine_chunks().to_numpy()
-        if l_keys:
-            enc = pc.dictionary_encode(tbl[l_keys[0]].combine_chunks())
-            codes = enc.indices.to_numpy()
-            order = np.lexsort((starts, codes))
-            sc = codes[order]
-            run_starts = np.concatenate(
-                ([0], np.flatnonzero(np.diff(sc)) + 1, [len(sc)])
-            )
-            ss, es = starts[order], ends[order]
-            for i in range(len(run_starts) - 1):
-                lo, hi = run_starts[i], run_starts[i + 1]
-                key = (enc.dictionary[int(sc[lo])].as_py(),)
-                index[key] = entry_fn(ss[lo:hi], es[lo:hi])
-        else:
-            order = np.argsort(starts, kind="stable")
-            index[()] = entry_fn(starts[order], ends[order])
-        return index
-
-    if single_job:
-        from sequila_native_spark.session import SequilaConf
-
-        cap = SequilaConf.from_spark(lb.sparkSession).max_broadcast_build_rows
-        if cap is not None and cap > 0:
-            left_pdf = lb.limit(cap + 1).toPandas()
-            if len(left_pdf) > cap:
-                raise BuildSideTooLargeError(
-                    f"build side has more than {cap} rows; broadcast-index "
-                    f"collect would risk a driver OOM."
-                )
-        else:
-            left_pdf = lb.toPandas()
-    else:
-        left_pdf = guarded_build_pandas(lb)
-    valid = left_pdf[_LS].notna() & left_pdf[_LE].notna()
-    for k in l_keys:
-        valid &= left_pdf[k].notna()
-    build = left_pdf[valid]
-    index: dict[tuple, tuple] = {}
-    if len(build):
-        group_iter = build.groupby(list(l_keys), sort=False) if l_keys else [((), build)]
-        for key, grp in group_iter:
-            if l_keys and not isinstance(key, tuple):
-                key = (key,)
-            index[key] = _build_count_entry(
-                grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64),
-                entry_fn,
-            )
-    return index
-
-
 def _index_count(
     lb, right_orig, l_keys, r_keys, right_start, right_end,
     strict, check, count_col, right_out_cols,
@@ -395,106 +277,37 @@ def _index_count(
 
     The per-batch count is two binary searches per probe
     (:func:`_group_counts`) — no candidate arrays, no per-row Python loop.
-    With 0/1 simple-typed key the probe runs on raw Arrow batches
-    (guide §4.2): passthrough columns are re-emitted untouched (no
-    pandas round trip of the payload) and the count column is appended.
+    The probe runs on raw Arrow batches (guide §4.2): passthrough columns
+    are re-emitted untouched and the count column is appended.
     """
     rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
-    use_arrow = len(l_keys) <= 1 and all(
-        _arrow_simple_key(lb.schema[k].dataType)
-        and _arrow_simple_key(right_orig.schema[rk].dataType)
-        for k, rk in zip(l_keys, r_keys)
+    index, _ = collect_index(
+        lb, l_keys, lambda s, e, rows: _entry_from_sorted(s, e)
     )
-    index = _build_count_index(lb, l_keys, single_job=True, use_arrow=use_arrow)
-
     bc = lb.sparkSession.sparkContext.broadcast(index)
     out_schema = StructType(
         list(right_orig.schema.fields) + [StructField(count_col, LongType(), False)]
     )
     keys = list(r_keys)
+    out_names = list(right_out_cols)
 
-    if use_arrow:
-        kname = keys[0] if keys else None
-        out_names = list(right_out_cols)
-
-        def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            idx_map = bc.value
-            i_rs = i_re = i_k = None
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                if i_rs is None:
-                    i_rs = batch.schema.get_field_index(_RS)
-                    i_re = batch.schema.get_field_index(_RE)
-                    i_k = (
-                        batch.schema.get_field_index(kname)
-                        if kname is not None else None
-                    )
-                counts_arr = np.zeros(n, dtype=np.int64)
-                rs_col, re_col = batch.column(i_rs), batch.column(i_re)
-                valid = pc.and_(pc.is_valid(rs_col), pc.is_valid(re_col))
-                qs = pc.fill_null(rs_col, 0).to_numpy(zero_copy_only=False)
-                qe = pc.fill_null(re_col, 0).to_numpy(zero_copy_only=False)
-                vmask = valid.to_numpy(zero_copy_only=False)
-                if i_k is not None:
-                    enc = pc.dictionary_encode(batch.column(i_k))
-                    codes = pc.fill_null(enc.indices, -1).to_numpy(
-                        zero_copy_only=False
-                    )
-                    for i in range(len(enc.dictionary)):
-                        entry = idx_map.get((enc.dictionary[i].as_py(),))
-                        if entry is None:
-                            continue
-                        pos = np.flatnonzero((codes == i) & vmask)
-                        if pos.size:
-                            counts_arr[pos] = _group_counts(
-                                entry, qs[pos], qe[pos]
-                            )
-                else:
-                    entry = idx_map.get(())
-                    if entry is not None:
-                        pos = np.flatnonzero(vmask)
-                        if pos.size:
-                            counts_arr[pos] = _group_counts(
-                                entry, qs[pos], qe[pos]
-                            )
-                sel = batch.select(out_names)
-                yield pa.RecordBatch.from_arrays(
-                    [*sel.columns, pa.array(counts_arr, type=pa.int64())],
-                    names=[*out_names, count_col],
-                )
-
-        return rb.mapInArrow(probe_arrow, schema=out_schema).select(
-            *right_out_cols, count_col
-        )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         idx_map = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            counts_arr = np.zeros(len(pdf), dtype=np.int64)
-            qs_all = pdf[_RS].to_numpy(np.int64, na_value=0)
-            qe_all = pdf[_RE].to_numpy(np.int64, na_value=0)
-            has_null = (pdf[_RS].isna() | pdf[_RE].isna()).to_numpy()
-            groups = pdf.groupby(keys, sort=False) if keys else [((), pdf)]
-            for key, grp in groups:
-                if keys and not isinstance(key, tuple):
-                    key = (key,)
+            counts = np.zeros(batch.num_rows, dtype=np.int64)
+            qs, qe = bounds_of(batch)
+            for key, pos in key_groups(batch, keys):
                 entry = idx_map.get(key)
-                if entry is None:
-                    continue
-                pos = pdf.index.get_indexer(grp.index)
-                pos = pos[~has_null[pos]]
-                if not pos.size:
-                    continue
-                counts_arr[pos] = _group_counts(entry, qs_all[pos], qe_all[pos])
-            out = pdf[right_out_cols].reset_index(drop=True)
-            out[count_col] = counts_arr
-            yield out
+                if entry is not None:
+                    counts[pos] = _group_counts(entry, qs[pos], qe[pos])
+            yield pa.RecordBatch.from_arrays(
+                [*batch.select(out_names).columns, pa.array(counts)],
+                names=[*out_names, count_col],
+            )
 
-    return rb.mapInPandas(probe, schema=out_schema).select(*right_out_cols, count_col)
+    return rb.mapInArrow(probe, schema=out_schema).select(*right_out_cols, count_col)
 
 
 def overlap_count_agg(
@@ -516,18 +329,18 @@ def overlap_count_agg(
     A count-shaped query does not need the join's output — only how many
     pairs each key group produces. Build: collect the LEFT side's
     (keys, bounds) once (guarded by ``spark.sequila.maxBroadcastBuildRows``)
-    into per-key sorted arrays — via Arrow for 0/1 simple-typed keys (no
-    per-row python objects), pandas otherwise. Probe: ``mapInArrow`` (same
-    gate; ``mapInPandas`` fallback) over the RIGHT side pruned to
-    (keys, bounds); each batch contributes per-key partial sums of the
-    two-binary-search counts (:func:`_group_counts`), so the per-pair
+    into per-key sorted arrays via Arrow. Probe: ``mapInArrow`` over the
+    RIGHT side pruned to (keys, bounds); each batch contributes per-key
+    partial sums of the two-binary-search counts (:func:`_group_counts`),
+    so the per-pair
     O(pairs) emission cost of the join disappears entirely — the plan is
     scan → probe → one tiny aggregation exchange.
 
     Group semantics match the inner join's groupBy: keyed form omits keys
     with zero pairs, keyless form (``on=None``) always returns exactly one
     row. Falls back to the binned pair join + groupBy when the build side
-    exceeds the broadcast guard (accounted memory, never a blind collect).
+    exceeds the broadcast guard (accounted memory, never a blind collect)
+    or the key types differ in family (``index_keys_ok``).
     """
     spark = left.sparkSession
     conf = SequilaConf.from_spark(spark)
@@ -540,22 +353,18 @@ def overlap_count_agg(
     left_p = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
     right_p = right.select(*dict.fromkeys([*r_keys, right_start, right_end]))
     lb = _with_bounds(left_p, left_start, left_end, _LS, _LE, strict, check)
-    # Arrow fast path (guide §4.2): viable for 0/1 simple-typed key, where
-    # the arrow and pandas key representations provably agree.
-    use_arrow = len(l_keys) <= 1 and all(
-        _arrow_simple_key(left_p.schema[k].dataType)
-        and _arrow_simple_key(right_p.schema[rk].dataType)
-        for k, rk in zip(l_keys, r_keys)
-    )
 
-    try:
-        index = _build_count_index(
-            lb.select(*l_keys, _LS, _LE), l_keys, single_job=True,
-            use_arrow=use_arrow,
-        )
-    except BuildSideTooLargeError:
-        # accounted-memory fallback: the binned pair join + groupBy — the
-        # exact expression this operator replaces
+    index = None
+    if index_keys_ok(left_p, right_p, l_keys, r_keys):
+        try:
+            index, _ = collect_index(
+                lb, l_keys, lambda s, e, rows: _entry_from_sorted(s, e)
+            )
+        except BuildSideTooLargeError:
+            pass
+    if index is None:
+        # accounted-memory (or mixed key type) fallback: the binned pair
+        # join + groupBy — the exact expression this operator replaces
         from sequila_native_spark.operators.interval_join import overlap_join
 
         oj = overlap_join(
@@ -580,108 +389,40 @@ def overlap_count_agg(
 
     key_fields = list(left_p.select(*l_keys).schema.fields) if l_keys else []
     out_schema = StructType(key_fields + [StructField(alias, LongType(), False)])
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out_pa_schema = to_arrow_schema(out_schema)
     keys = list(r_keys)
-    key_names = list(l_keys)
 
-    if use_arrow:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_pa_schema = to_arrow_schema(out_schema)
-        key_pa_type = out_pa_schema.field(0).type if key_names else None
-        kname = keys[0] if keys else None
-
-        def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            idx_map = bc.value
-            i_rs = i_re = i_k = None
-            for batch in batches:
-                if batch.num_rows == 0 or not idx_map:
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        idx_map = bc.value
+        for batch in batches:
+            if batch.num_rows == 0 or not idx_map:
+                continue
+            qs, qe = bounds_of(batch)
+            out_keys: list[tuple] = []
+            out_counts: list[int] = []
+            for key, pos in key_groups(batch, keys):
+                entry = idx_map.get(key)
+                if entry is None:
                     continue
-                if i_rs is None:
-                    i_rs = batch.schema.get_field_index(_RS)
-                    i_re = batch.schema.get_field_index(_RE)
-                    i_k = (
-                        batch.schema.get_field_index(kname)
-                        if kname is not None else None
-                    )
-                ok = pc.and_(
-                    pc.is_valid(batch.column(i_rs)), pc.is_valid(batch.column(i_re))
+                total = int(_group_counts(entry, qs[pos], qe[pos]).sum())
+                if total:
+                    out_keys.append(key)
+                    out_counts.append(total)
+            if out_counts:
+                key_cols = [
+                    pa.array([k[i] for k in out_keys], type=field.type)
+                    for i, field in enumerate(list(out_pa_schema)[:-1])
+                ]
+                yield pa.RecordBatch.from_arrays(
+                    [*key_cols, pa.array(out_counts, type=pa.int64())],
+                    schema=out_pa_schema,
                 )
-                if i_k is not None:
-                    ok = pc.and_(ok, pc.is_valid(batch.column(i_k)))
-                if not pc.all(ok).as_py():
-                    batch = batch.filter(ok)
-                    if batch.num_rows == 0:
-                        continue
-                qs = batch.column(i_rs).to_numpy(zero_copy_only=False)
-                qe = batch.column(i_re).to_numpy(zero_copy_only=False)
-                out_keys: list = []
-                out_counts: list[int] = []
-                if i_k is not None:
-                    enc = pc.dictionary_encode(batch.column(i_k))
-                    codes = enc.indices.to_numpy(zero_copy_only=False)
-                    for i in range(len(enc.dictionary)):
-                        entry = idx_map.get((enc.dictionary[i].as_py(),))
-                        if entry is None:
-                            continue
-                        m = codes == i
-                        total = int(_group_counts(entry, qs[m], qe[m]).sum())
-                        if total:
-                            out_keys.append(enc.dictionary[i].as_py())
-                            out_counts.append(total)
-                else:
-                    entry = idx_map.get(())
-                    if entry is not None:
-                        total = int(_group_counts(entry, qs, qe).sum())
-                        if total:
-                            out_counts.append(total)
-                if out_counts:
-                    arrays = []
-                    if key_pa_type is not None:
-                        arrays.append(pa.array(out_keys, type=key_pa_type))
-                    arrays.append(pa.array(out_counts, type=pa.int64()))
-                    yield pa.RecordBatch.from_arrays(arrays, schema=out_pa_schema)
 
-        partials = rb.mapInArrow(probe_arrow, schema=out_schema)
-    else:
-        def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            idx_map = bc.value
-            for pdf in batches:
-                if pdf.empty or not idx_map:
-                    continue
-                ok = pdf[_RS].notna() & pdf[_RE].notna()
-                for k in keys:
-                    ok &= pdf[k].notna()
-                if not ok.all():
-                    pdf = pdf[ok]
-                if pdf.empty:
-                    continue
-                qs_all = pdf[_RS].to_numpy(np.int64)
-                qe_all = pdf[_RE].to_numpy(np.int64)
-                out_keys: list[tuple] = []
-                out_counts: list[int] = []
-                groups = pdf.groupby(keys, sort=False) if keys else [((), pdf)]
-                for key, grp in groups:
-                    if keys and not isinstance(key, tuple):
-                        key = (key,)
-                    entry = idx_map.get(key)
-                    if entry is None:
-                        continue
-                    pos = pdf.index.get_indexer(grp.index)
-                    total = int(_group_counts(entry, qs_all[pos], qe_all[pos]).sum())
-                    if total:
-                        out_keys.append(key)
-                        out_counts.append(total)
-                if out_counts:
-                    data = {
-                        name: [k[i] for k in out_keys]
-                        for i, name in enumerate(key_names)
-                    }
-                    data[alias] = out_counts
-                    yield pd.DataFrame(data)
-
-        partials = rb.mapInPandas(probe, schema=out_schema)
-    if key_names:
-        return partials.groupBy(*key_names).agg(
+    partials = rb.mapInArrow(probe, schema=out_schema)
+    if l_keys:
+        return partials.groupBy(*l_keys).agg(
             F.sum(alias).cast("long").alias(alias)
         )
     return partials.agg(

@@ -23,18 +23,24 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from sequila_native_spark.operators.interval_join import (
+from sequila_native_spark.operators.index import (
     _LE,
     _LS,
     _RE,
     _RS,
     BuildSideTooLargeError,
+    bounds_of,
+    collect_index,
+    index_keys_ok,
+    key_groups,
+)
+from sequila_native_spark.operators.interval_join import (
     _binned_pairs,
     _probe_spans,
     _with_bounds,
@@ -148,27 +154,12 @@ def _index_coverage(
     strict, check, count_col, cover_col, right_out_cols,
 ):
     """Broadcast build arrays, streaming vectorized probe, zero shuffle —
-    the coverage twin of count_overlaps._index_count (same Arrow probe
-    gate, same guarded single-job build collect)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from sequila_native_spark.operators.count_overlaps import (
-        _arrow_simple_key,
-        _build_count_index,
-    )
-
+    the coverage twin of count_overlaps._index_count (same shared Arrow
+    build and ``mapInArrow`` probe)."""
     rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
-    use_arrow = len(l_keys) <= 1 and all(
-        _arrow_simple_key(lb.schema[k].dataType)
-        and _arrow_simple_key(right_orig.schema[rk].dataType)
-        for k, rk in zip(l_keys, r_keys)
+    index, _ = collect_index(
+        lb, l_keys, lambda s, e, rows: _cov_entry_from_sorted(s, e)
     )
-    index = _build_count_index(
-        lb, l_keys, single_job=True, use_arrow=use_arrow,
-        entry_from_sorted=_cov_entry_from_sorted,
-    )
-
     bc = lb.sparkSession.sparkContext.broadcast(index)
     out_schema = StructType(
         list(right_orig.schema.fields)
@@ -176,98 +167,30 @@ def _index_coverage(
            StructField(cover_col, LongType(), False)]
     )
     keys = list(r_keys)
+    out_names = list(right_out_cols)
 
-    if use_arrow:
-        kname = keys[0] if keys else None
-        out_names = list(right_out_cols)
-
-        def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            idx_map = bc.value
-            i_rs = i_re = i_k = None
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                if i_rs is None:
-                    i_rs = batch.schema.get_field_index(_RS)
-                    i_re = batch.schema.get_field_index(_RE)
-                    i_k = (
-                        batch.schema.get_field_index(kname)
-                        if kname is not None else None
-                    )
-                cnt_arr = np.zeros(n, dtype=np.int64)
-                cov_arr = np.zeros(n, dtype=np.int64)
-                rs_col, re_col = batch.column(i_rs), batch.column(i_re)
-                valid = pc.and_(pc.is_valid(rs_col), pc.is_valid(re_col))
-                qs = pc.fill_null(rs_col, 0).to_numpy(zero_copy_only=False)
-                qe = pc.fill_null(re_col, 0).to_numpy(zero_copy_only=False)
-                qs = qs.astype(np.int64, copy=False)
-                qe = qe.astype(np.int64, copy=False)
-                vmask = valid.to_numpy(zero_copy_only=False)
-                if i_k is not None:
-                    enc = pc.dictionary_encode(batch.column(i_k))
-                    codes = pc.fill_null(enc.indices, -1).to_numpy(
-                        zero_copy_only=False
-                    )
-                    for i in range(len(enc.dictionary)):
-                        entry = idx_map.get((enc.dictionary[i].as_py(),))
-                        if entry is None:
-                            continue
-                        pos = np.flatnonzero((codes == i) & vmask)
-                        if pos.size:
-                            cnt_arr[pos], cov_arr[pos] = _cov_counts(
-                                entry, qs[pos], qe[pos]
-                            )
-                else:
-                    entry = idx_map.get(())
-                    if entry is not None:
-                        pos = np.flatnonzero(vmask)
-                        if pos.size:
-                            cnt_arr[pos], cov_arr[pos] = _cov_counts(
-                                entry, qs[pos], qe[pos]
-                            )
-                sel = batch.select(out_names)
-                yield pa.RecordBatch.from_arrays(
-                    [*sel.columns,
-                     pa.array(cnt_arr, type=pa.int64()),
-                     pa.array(cov_arr, type=pa.int64())],
-                    names=[*out_names, count_col, cover_col],
-                )
-
-        return rb.mapInArrow(probe_arrow, schema=out_schema).select(
-            *right_out_cols, count_col, cover_col
-        )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         idx_map = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            cnt_arr = np.zeros(len(pdf), dtype=np.int64)
-            cov_arr = np.zeros(len(pdf), dtype=np.int64)
-            has_null = pdf[_RS].isna() | pdf[_RE].isna()
-            qs_all = pdf[_RS].fillna(0).to_numpy(np.int64)
-            qe_all = pdf[_RE].fillna(0).to_numpy(np.int64)
-            groups = pdf.groupby(keys, sort=False) if keys else [((), pdf)]
-            for key, grp in groups:
-                if keys and not isinstance(key, tuple):
-                    key = (key,)
+            cnt_arr = np.zeros(n, dtype=np.int64)
+            cov_arr = np.zeros(n, dtype=np.int64)
+            qs, qe = bounds_of(batch)
+            for key, pos in key_groups(batch, keys):
                 entry = idx_map.get(key)
-                if entry is None:
-                    continue
-                pos = pdf.index.get_indexer(grp.index)
-                pos = pos[~has_null.to_numpy()[pos]]
-                if not pos.size:
-                    continue
-                cnt_arr[pos], cov_arr[pos] = _cov_counts(
-                    entry, qs_all[pos], qe_all[pos]
-                )
-            out = pdf[right_out_cols].reset_index(drop=True)
-            out[count_col] = cnt_arr
-            out[cover_col] = cov_arr
-            yield out
+                if entry is not None:
+                    cnt_arr[pos], cov_arr[pos] = _cov_counts(
+                        entry, qs[pos], qe[pos]
+                    )
+            yield pa.RecordBatch.from_arrays(
+                [*batch.select(out_names).columns,
+                 pa.array(cnt_arr), pa.array(cov_arr)],
+                names=[*out_names, count_col, cover_col],
+            )
 
-    return rb.mapInPandas(probe, schema=out_schema).select(
+    return rb.mapInArrow(probe, schema=out_schema).select(
         *right_out_cols, count_col, cover_col
     )
 
@@ -307,14 +230,16 @@ def coverage(
 
     lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
 
-    if algo == "index":
+    if algo == "index" and index_keys_ok(left, right, l_keys, r_keys):
         try:
             return _index_coverage(
                 lb, right, l_keys, r_keys, right_start, right_end,
                 strict, check, count_col, cover_col, right_out_cols,
             )
         except BuildSideTooLargeError:
-            algo = "binning"  # accounted-memory fallback, never a blind collect
+            pass  # accounted-memory fallback, never a blind collect
+    # index past the guard or with mixed key types (only Catalyst's coerced
+    # join matches 1 to '1'): the binned pair join below
 
     right = stamp_row_id(right, _PID)
     rb = _with_bounds(right, right_start, right_end, _RS, _RE, strict, check)

@@ -37,9 +37,11 @@ cross-algorithm validation strategy):
     (left) side as per-key sorted numpy arrays — the superintervals recipe
     (sorted starts, ends, running-max of ends; ``superintervals/src/
     superintervals.rs:161-307``) — and stream probe batches through
-    ``mapInPandas``. Probe cost per row is two binary searches plus an
-    output-sensitive scan. Use when the build side fits in executor memory;
-    parallelism = probe-side partitions, zero shuffle.
+    ``mapInArrow`` (the shared broadcast index of
+    :mod:`~sequila_native_spark.operators.index`, any number of equi-keys).
+    Probe cost per row is two binary searches plus an output-sensitive scan.
+    Use when the build side fits in executor memory; parallelism = probe-side
+    partitions, zero shuffle.
 """
 
 from __future__ import annotations
@@ -48,10 +50,22 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sequila_native_spark.operators.index import (  # noqa: F401 (re-exported)
+    _LE,
+    _LS,
+    _RE,
+    _RS,
+    BuildSideTooLargeError,
+    bounds_of,
+    collect_index,
+    index_keys_ok,
+    key_groups,
+)
 from sequila_native_spark.operators.intervals import (
     checked_i32,
     fraction_predicate,
@@ -65,114 +79,7 @@ from sequila_native_spark.session import (
 )
 
 # Internal temp columns (dropped before returning).
-_LS, _LE = "__sq_ls", "__sq_le"
-_RS, _RE = "__sq_rs", "__sq_re"
 _LBIN, _RBIN = "__sq_lbin", "__sq_rbin"
-
-
-class BuildSideTooLargeError(RuntimeError):
-    """The build side exceeds ``spark.sequila.maxBroadcastBuildRows``.
-
-    The reference pre-reserves and accounts build memory before collecting
-    (``interval_join.rs:624-660``); collecting an unbounded build side to the
-    driver would OOM instead. Callers with a distributed equivalent
-    (``partitioned`` / ``binning``) auto-fall-back; otherwise this error
-    surfaces with the knob to raise."""
-
-
-def compact_build_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Shrink a collected build-side frame before broadcasting it.
-
-    Object (string) columns become pandas categoricals — genomic keys have
-    tiny cardinality (~25 contigs), so 600k pickled Python strings collapse
-    to 2-byte codes + one category table. This cuts broadcast pickle size
-    ~5×, which is what the per-task unpickle in every probe worker pays.
-    Callers must re-expand with :func:`expand_taken` after row selection
-    (Arrow output conversion wants plain dtypes, not dictionaries).
-    """
-    out = {}
-    for c in pdf.columns:
-        s = pdf[c]
-        if s.dtype == object:
-            try:
-                out[c] = s.astype("category")
-            except TypeError:
-                # unhashable payloads (array/map/struct columns) can't be
-                # dictionary-encoded — keep them raw; decompose_build's
-                # "plain" branch handles object arrays (reviewer, r7)
-                out[c] = s
-        else:
-            out[c] = s
-    return pd.DataFrame(out, index=pdf.index)
-
-
-def expand_taken(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Undo :func:`compact_build_pandas` on an output batch (post-``take``,
-    so only emitted rows pay the expansion)."""
-    for c in pdf.columns:
-        if isinstance(pdf[c].dtype, pd.CategoricalDtype):
-            pdf[c] = pdf[c].astype(object)
-    return pdf
-
-
-def decompose_build(build_pdf: pd.DataFrame) -> dict:
-    """One-time per-task decomposition of a compacted build frame into raw
-    column arrays, so each emitted batch is a pure numpy fancy-index.
-
-    The per-batch alternative (``build_pdf.take(idx)`` on a categorical frame
-    + ``astype(object)``) re-walks the dictionary for every batch; for
-    high-match probes that decode dominates the probe kernel. Here the
-    (tiny, ~25-entry) category tables are pulled out once per task:
-    ``codes`` (int8/16 view, no copy) + ``categories`` (object array), and
-    numeric columns become zero-copy numpy views.
-    """
-    out = {}
-    for c in build_pdf.columns:
-        s = build_pdf[c]
-        if isinstance(s.dtype, pd.CategoricalDtype):
-            out[c] = ("cat", s.cat.codes.to_numpy(), s.cat.categories.to_numpy(object))
-        else:
-            out[c] = ("plain", s.to_numpy(), None)
-    return out
-
-
-def take_build_rows(
-    decomp: dict, idx: np.ndarray, null_mask: np.ndarray | None = None
-) -> pd.DataFrame:
-    """Gather build rows by position from :func:`decompose_build` output.
-
-    ``null_mask`` marks output rows that must be all-null (nearest-join
-    padding for probe rows with no build group, where ``idx`` holds ``-1``);
-    numeric columns upcast exactly like the old ``reindex`` path did.
-    """
-    n = len(idx)
-    if not decomp:
-        return pd.DataFrame(index=pd.RangeIndex(n))
-    safe = np.where(idx < 0, 0, idx) if null_mask is not None else idx
-    data = {}
-    for c, (kind, arr, cats) in decomp.items():
-        if len(arr) == 0:
-            # empty build side: every output row is padding (idx all -1)
-            data[c] = np.full(n, None, dtype=object)
-            continue
-        if kind == "cat":
-            codes = arr[safe]
-            vals = np.empty(n, dtype=object)
-            okc = codes >= 0
-            vals[okc] = cats[codes[okc]]
-            vals[~okc] = None
-            if null_mask is not None:
-                vals[null_mask] = None
-            data[c] = vals
-        else:
-            taken = arr[safe]
-            if null_mask is not None and null_mask.any():
-                s = pd.Series(taken)
-                s[null_mask] = None  # upcasts int→float NaN, like reindex
-                data[c] = s.reset_index(drop=True)
-            else:
-                data[c] = taken
-    return pd.DataFrame(data, columns=list(decomp.keys()))
 
 
 def compact_index_arrays(*arrays: np.ndarray) -> tuple[np.ndarray, ...]:
@@ -188,26 +95,6 @@ def compact_index_arrays(*arrays: np.ndarray) -> tuple[np.ndarray, ...]:
             a = a.astype(np.int32)
         out.append(a)
     return tuple(out)
-
-
-def guarded_build_pandas(df: DataFrame, max_rows: int | None = None) -> pd.DataFrame:
-    """``df.toPandas()`` with a row-count guard.
-
-    Probes ``limit(max+1).count()`` first — a cheap bounded scan — and raises
-    :class:`BuildSideTooLargeError` instead of collecting when the build side
-    exceeds ``spark.sequila.maxBroadcastBuildRows`` (≤0 disables the guard).
-    """
-    if max_rows is None:
-        max_rows = SequilaConf.from_spark(df.sparkSession).max_broadcast_build_rows
-    if max_rows is not None and max_rows > 0:
-        seen = df.limit(max_rows + 1).count()
-        if seen > max_rows:
-            raise BuildSideTooLargeError(
-                f"build side has more than {max_rows} rows; broadcast-index "
-                f"collect would risk a driver OOM. Use algorithm='partitioned' "
-                f"or 'binning', or raise spark.sequila.maxBroadcastBuildRows."
-            )
-    return df.toPandas()
 
 
 def _probe_spans(
@@ -544,6 +431,13 @@ def overlap_join(
     check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
+    l_keys = [p[0] for p in sides.on]
+    if algo in ("index", "partitioned") and not index_keys_ok(
+        left, right, l_keys, [p[1] for p in sides.on]
+    ):
+        # mixed key type families (int vs string): only Catalyst's coerced
+        # equi-join matches 1 to '1' — the index and cogroup paths cannot
+        algo = "binning"
     if algo == "binning":
         # outer joins on index/partitioned no longer resolve eagerly: the
         # width is only consumed if the broadcast guard trips into the
@@ -556,7 +450,6 @@ def overlap_join(
     right, renames = _disambiguate(left, right, rsuffix)
     r_start = renames.get(right_start, right_start)
     r_end = renames.get(right_end, right_end)
-    l_keys = [p[0] for p in sides.on]
     r_keys = [renames.get(p[1], p[1]) for p in sides.on]
 
     out_cols = [*left.columns, *right.columns]
@@ -879,21 +772,25 @@ def _broadcast_index_join(
     out_cols: list[str],
     metrics=None,
 ) -> DataFrame:
-    """CollectLeft-style broadcast index + mapInPandas probe.
+    """CollectLeft-style broadcast index + ``mapInArrow`` probe.
 
-    Build: collect the left side once, group by equi-key tuple, sort each
-    group by start and keep ``(starts, ends, running_max(ends), order)`` —
-    the superintervals layout (``superintervals.rs:161-307``): for a query
+    Build (:func:`~sequila_native_spark.operators.index.collect_index`):
+    collect the left side once, group by equi-key tuple, sort each group by
+    start and keep ``(starts, ends, running_max(ends), rows)`` — the
+    superintervals layout (``superintervals.rs:161-307``): for a query
     ``[qs, qe]`` candidates lie in ``starts[lo:hi)`` with
     ``hi = searchsorted(starts, qe, 'right')`` and
     ``lo = searchsorted(running_max_ends[:hi], qs, 'left')`` (running max is
     non-decreasing ⇒ binary-searchable), then an exact ``ends >= qs`` mask.
 
-    Probe: Arrow-batched ``mapInPandas`` over the right side — no shuffle;
-    every probe partition shares the one broadcast build, the analogue of the
-    reference's ``OnceAsync`` shared build (``joins/utils.rs:73-107``).
+    Probe: Arrow batches of the right side — no shuffle; every probe
+    partition shares the one broadcast build, the analogue of the
+    reference's ``OnceAsync`` shared build (``joins/utils.rs:73-107``). Output
+    rows are Arrow ``take`` s of the build payload and the probe batch.
     """
     import time as _time
+
+    from pyspark.sql.types import StructType
 
     spark = lb.sparkSession
     conf = SequilaConf.from_spark(spark)
@@ -902,77 +799,46 @@ def _broadcast_index_join(
     right_cols = [c for c in out_cols if c not in lb.columns]
 
     build_t0 = _time.time()
-    left_pdf = guarded_build_pandas(lb)
-    index: dict[tuple, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = {}
-    valid = left_pdf[_LS].notna() & left_pdf[_LE].notna()
-    for k in l_keys:
-        valid &= left_pdf[k].notna()
-    build = left_pdf[valid]
-    if len(build):
-        group_iter = (
-            build.groupby(list(l_keys), sort=False) if l_keys else [((), build)]
-        )
-        for key, grp in group_iter:
-            if l_keys and not isinstance(key, tuple):
-                key = (key,)
-            starts, ends, runmax, order = _sorted_build_arrays(
-                grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64)
-            )
-            index[key] = compact_index_arrays(
-                starts, ends, runmax, grp.index.to_numpy()[order]
-            )
-
-    left_out = compact_build_pandas(left_pdf[left_cols])
-    bc = spark.sparkContext.broadcast((index, left_out))
-
-    from pyspark.sql.types import StructType
+    index, payload = collect_index(
+        lb, l_keys,
+        lambda s, e, rows: compact_index_arrays(
+            s, e, np.maximum.accumulate(e), rows
+        ),
+        payload_cols=left_cols,
+    )
+    bc = spark.sparkContext.broadcast((index, payload))
+    if metrics is not None:
+        metrics.record_build(payload.num_rows, build_t0)
 
     out_schema = StructType(
         list(lb.select(*left_cols).schema.fields)
         + list(rb.select(*right_cols).schema.fields)
     )
-
-    if metrics is not None:
-        metrics.record_build(len(left_pdf), build_t0)
-
+    names = [*left_cols, *right_cols]
     rk_list = list(r_keys)
     rb = _ensure_parallel(rb, [])  # round-robin: probe-side parallelism, no skew
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_map, build_pdf = bc.value
-        build_cols = decompose_build(build_pdf)  # once per task, not per batch
-        for pdf in batches:
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        idx_map, build = bc.value
+        for batch in batches:
             if metrics is not None:
                 metrics.probe_batches.add(1)
-                metrics.probe_input_rows.add(len(pdf))
-            if pdf.empty or not idx_map:
+                metrics.probe_input_rows.add(batch.num_rows)
+            if batch.num_rows == 0 or not idx_map:
                 continue
-            ok = pdf[_RS].notna() & pdf[_RE].notna()
-            for k in rk_list:
-                ok &= pdf[k].notna()
-            pdf = pdf[ok]
-            if pdf.empty:
-                continue
-            qs_all = pdf[_RS].to_numpy(np.int64)
-            qe_all = pdf[_RE].to_numpy(np.int64)
+            qs_all, qe_all = bounds_of(batch)
             build_take: list[np.ndarray] = []
             probe_take: list[np.ndarray] = []
-            groups = (
-                pdf.groupby(rk_list, sort=False) if rk_list else [((), pdf)]
-            )
-            for key, grp in groups:
-                if rk_list and not isinstance(key, tuple):
-                    key = (key,)
+            for key, pos in key_groups(batch, rk_list):
                 entry = idx_map.get(key)
                 if entry is None:
                     continue
-                starts, ends, runmax, row_idx = entry
-                pos = pdf.index.get_indexer(grp.index)
+                starts, ends, runmax, rows = entry
                 cand, probe_rep = _probe_spans(
                     starts, ends, runmax, qs_all[pos], qe_all[pos]
                 )
                 if cand.size:
-                    build_take.append(row_idx[cand])
+                    build_take.append(rows[cand])
                     probe_take.append(pos[probe_rep])
             if not build_take:
                 continue
@@ -980,15 +846,18 @@ def _broadcast_index_join(
             p_idx = np.concatenate(probe_take)
             if metrics is not None:
                 metrics.output_rows.add(len(b_idx))
+            right = batch.select(right_cols)
             # A8 analogue: cap emitted batch size so huge per-batch match
             # counts don't balloon Arrow buffers (interval_join.rs:550-555,
             # default 100k rows; :1439-1540 1M full-mode cap)
             for s in range(0, len(b_idx), max_batch):
-                l_part = take_build_rows(build_cols, b_idx[s : s + max_batch])
-                r_part = pdf[right_cols].iloc[p_idx[s : s + max_batch]].reset_index(drop=True)
-                yield pd.concat([l_part, r_part], axis=1)
+                left_part = build.take(pa.array(b_idx[s : s + max_batch]))
+                right_part = right.take(pa.array(p_idx[s : s + max_batch]))
+                yield pa.RecordBatch.from_arrays(
+                    [*left_part.columns, *right_part.columns], names=names
+                )
 
-    return rb.mapInPandas(probe, schema=out_schema).select(*out_cols)
+    return rb.mapInArrow(probe, schema=out_schema).select(*out_cols)
 
 
 def window_join(

@@ -30,12 +30,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from sequila_native_spark.operators.interval_join import (
+from sequila_native_spark.operators.index import (
     _LE,
     _LS,
     _RE,
     _RS,
     BuildSideTooLargeError,
+    bounds_of,
+    collect_index,
+    index_keys_ok,
+    key_groups,
+)
+from sequila_native_spark.operators.interval_join import (
     _binned_pairs,
     _probe_spans,
     _with_bounds,
@@ -103,61 +109,6 @@ def _np_frac_mask(
     return out
 
 
-def _build_map_index(lb: DataFrame, l_keys: list[str]) -> dict[tuple, tuple]:
-    """Guarded single-job Arrow collect of the LEFT side into per-key
-    ``(starts_sorted, ends_by_start, runmax, row_ids_by_start)`` arrays —
-    the count kernel's build shape plus the stamped row id so per-batch
-    partials can be re-attached to left rows. Raises
-    :class:`BuildSideTooLargeError` past ``maxBroadcastBuildRows``."""
-    from sequila_native_spark.session import SequilaConf
-
-    cap = SequilaConf.from_spark(lb.sparkSession).max_broadcast_build_rows
-    if cap is not None and cap > 0:
-        tbl = lb.limit(cap + 1).toArrow()
-        if tbl.num_rows > cap:
-            raise BuildSideTooLargeError(
-                f"build side has more than {cap} rows; broadcast-index "
-                f"collect would risk a driver OOM."
-            )
-    else:
-        tbl = lb.toArrow()
-    # rows with null key/bounds can never match a pair; the final left join
-    # still emits them with the null-group defaults
-    ok = pc.and_(pc.is_valid(tbl[_LS]), pc.is_valid(tbl[_LE]))
-    for k in l_keys:
-        ok = pc.and_(ok, pc.is_valid(tbl[k]))
-    if tbl.num_rows and not pc.all(ok).as_py():
-        tbl = tbl.filter(ok)
-    index: dict[tuple, tuple] = {}
-    if tbl.num_rows == 0:
-        return index
-    starts = tbl[_LS].combine_chunks().to_numpy().astype(np.int64, copy=False)
-    ends = tbl[_LE].combine_chunks().to_numpy().astype(np.int64, copy=False)
-    aids = tbl[_AID].combine_chunks().to_numpy().astype(np.int64, copy=False)
-
-    def entry(s, e, a):
-        order = np.argsort(s, kind="stable")
-        s, e, a = s[order], e[order], a[order]
-        return (s, e, np.maximum.accumulate(e), a)
-
-    if l_keys:
-        enc = pc.dictionary_encode(tbl[l_keys[0]].combine_chunks())
-        codes = enc.indices.to_numpy()
-        order = np.lexsort((starts, codes))
-        sc = codes[order]
-        run_starts = np.concatenate(
-            ([0], np.flatnonzero(np.diff(sc)) + 1, [len(sc)])
-        )
-        ss, es, aa = starts[order], ends[order], aids[order]
-        for i in range(len(run_starts) - 1):
-            lo, hi = run_starts[i], run_starts[i + 1]
-            key = (enc.dictionary[int(sc[lo])].as_py(),)
-            index[key] = entry(ss[lo:hi], es[lo:hi], aa[lo:hi])
-    else:
-        index[()] = entry(starts, ends, aids)
-    return index
-
-
 def _index_map(
     left_stamped: DataFrame,
     lb: DataFrame,
@@ -174,8 +125,9 @@ def _index_map(
     probe side's values per LEFT row without emitting a single pair row.
 
     Build: the left (keys, bounds, row id) collected once (guarded) into
-    per-key sorted arrays. Probe: one ``mapInArrow`` pass over the right
-    side pruned to (key, bounds, referenced values); each batch enumerates
+    per-key sorted arrays (the shared broadcast index). Probe: one
+    ``mapInArrow`` pass over the right side pruned to (keys, bounds,
+    referenced values); each batch enumerates
     its exact matched pairs against the broadcast arrays
     (:func:`_probe_spans` — the candidate-mask kernel, exact for inverted
     rows on either side), applies the fraction mask, and emits ONE partial
@@ -186,11 +138,15 @@ def _index_map(
     aggregate bit-for-bit while the pair-sized exchange disappears: the
     plan is scan → probe → one tiny partial-agg exchange → left join.
     """
-    index = _build_map_index(
-        lb.select(*dict.fromkeys([*l_keys, _LS, _LE, _AID])), l_keys
+    index, payload = collect_index(
+        lb, l_keys,
+        lambda s, e, rows: (s, e, np.maximum.accumulate(e), rows),
+        payload_cols=[_AID],
     )
     spark = lb.sparkSession
-    bc = spark.sparkContext.broadcast(index)
+    bc = spark.sparkContext.broadcast(
+        (index, payload.column(0).to_numpy(zero_copy_only=False))
+    )
 
     # (out_name, op, internal value alias or None) in aggs order
     plan = [
@@ -202,8 +158,7 @@ def _index_map(
         [StructField(_AID, LongType(), False)]
         + [StructField(out, LongType(), op != "count") for out, op, _ in plan]
     )
-    kname = r_keys[0] if r_keys else None
-    need_cols = [c for c in ([kname] if kname else []) + [_RS, _RE] + val_names]
+    need_cols = list(dict.fromkeys([*r_keys, _RS, _RE, *val_names]))
     from sequila_native_spark.util import ensure_parallel
 
     # hash-keyed repartition (deterministic columns): a few-split scan
@@ -214,29 +169,14 @@ def _index_map(
     i64min, i64max = np.iinfo(np.int64).min, np.iinfo(np.int64).max
 
     def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        idx_map = bc.value
+        idx_map, all_aids = bc.value
         for batch in batches:
             if batch.num_rows == 0 or not idx_map:
                 continue
-            rs_col = batch.column(batch.schema.get_field_index(_RS))
-            re_col = batch.column(batch.schema.get_field_index(_RE))
-            ok = pc.and_(pc.is_valid(rs_col), pc.is_valid(re_col))
-            if kname is not None:
-                k_col = batch.column(batch.schema.get_field_index(kname))
-                ok = pc.and_(ok, pc.is_valid(k_col))
-            if not pc.all(ok).as_py():
-                batch = batch.filter(ok)
-                if batch.num_rows == 0:
-                    continue
-                rs_col = batch.column(batch.schema.get_field_index(_RS))
-                re_col = batch.column(batch.schema.get_field_index(_RE))
-                if kname is not None:
-                    k_col = batch.column(batch.schema.get_field_index(kname))
-            qs = rs_col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            qe = re_col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+            qs, qe = bounds_of(batch)
             vals: dict[str, tuple[np.ndarray, np.ndarray]] = {}
             for a in val_names:
-                col = batch.column(batch.schema.get_field_index(a))
+                col = batch.column(a)
                 vals[a] = (
                     pc.fill_null(col, 0).to_numpy(zero_copy_only=False)
                     .astype(np.int64, copy=False),
@@ -246,11 +186,14 @@ def _index_map(
             out_aid: list[np.ndarray] = []
             out_cols: dict[str, list] = {out: [] for out, _, _ in plan}
 
-            def group(entry, pos):
-                starts, ends, runmax, aids = entry
+            for key, pos in key_groups(batch, r_keys):
+                entry = idx_map.get(key)
+                if entry is None:
+                    continue
+                starts, ends, runmax, rows = entry
                 cand, rep = _probe_spans(starts, ends, runmax, qs[pos], qe[pos])
                 if not cand.size:
-                    return
+                    continue
                 if frac_args is not None:
                     keep = _np_frac_mask(
                         starts[cand], ends[cand], qs[pos][rep], qe[pos][rep],
@@ -258,11 +201,11 @@ def _index_map(
                     )
                     cand, rep = cand[keep], rep[keep]
                     if not cand.size:
-                        return
+                        continue
                 gpos = pos[rep]  # batch row index per pair
                 upos, inv = np.unique(cand, return_inverse=True)
                 m = len(upos)
-                out_aid.append(aids[upos])
+                out_aid.append(all_aids[rows[upos]])
                 for out, op, a in plan:
                     if op == "count":
                         out_cols[out].append(np.bincount(inv, minlength=m))
@@ -284,20 +227,6 @@ def _index_map(
                         np.ma.masked_array(acc, mask=(nn == 0))
                     )
 
-            if kname is not None:
-                enc = pc.dictionary_encode(k_col)
-                codes = enc.indices.to_numpy(zero_copy_only=False)
-                for i in range(len(enc.dictionary)):
-                    entry = idx_map.get((enc.dictionary[i].as_py(),))
-                    if entry is None:
-                        continue
-                    pos = np.flatnonzero(codes == i)
-                    if pos.size:
-                        group(entry, pos)
-            else:
-                entry = idx_map.get(())
-                if entry is not None:
-                    group(entry, np.arange(batch.num_rows))
             if out_aid:
                 arrays = [pa.array(np.concatenate(out_aid), type=pa.int64())]
                 for out, _, _ in plan:
@@ -383,10 +312,11 @@ def map_intervals(
     oracle predicate join), or ``index`` — the broadcast-index kernel
     (guarded by ``spark.sequila.maxBroadcastBuildRows``) for the
     batch-decomposable aggregates (count/sum/min/max over integral value
-    columns, ≤1 simple-typed equi-key): per-batch partial aggregates
+    columns, any number of equi-keys): per-batch partial aggregates
     replace the pair join, so no pair-sized exchange exists at all.
-    Non-decomposable aggs (mean/collect/distinct/count_distinct), exotic
-    keys, non-integral values, or an over-budget left side fall back to
+    Non-decomposable aggs (mean/collect/distinct/count_distinct), key
+    types that differ in family between the sides (``int`` vs ``string``),
+    non-integral values, or an over-budget left side fall back to
     ``binning`` (the exact pre-existing plan). ``partitioned`` routes to
     ``binning`` — the aggregate already shuffles on the left row id.
     """
@@ -454,10 +384,6 @@ def map_intervals(
     rb = _with_bounds(right_pruned, right_start, right_end, _RS, _RE, strict, check)
 
     if algo == "index":
-        from sequila_native_spark.operators.count_overlaps import (
-            _arrow_simple_key,
-        )
-
         rtypes = dict(right.dtypes)
         kernel_ok = (
             all(op in _KERNEL_OPS for op, _ in aggs.values())
@@ -465,12 +391,7 @@ def map_intervals(
                 rtypes[v] in _INTEGRAL_SPARK
                 for _, v in aggs.values() if v is not None
             )
-            and len(l_keys) <= 1
-            and all(
-                _arrow_simple_key(left.schema[k].dataType)
-                and _arrow_simple_key(right.schema[rk].dataType)
-                for k, rk in zip(l_keys, r_keys)
-            )
+            and index_keys_ok(left, right, l_keys, r_keys)
         )
         if kernel_ok:
             frac_args = None

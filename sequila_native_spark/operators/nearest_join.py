@@ -29,11 +29,15 @@ Algorithms:
 
 ``naive``
     Left-outer join on equi-keys + window ``row_number`` (Catalyst-only; the
-    correctness oracle).
+    correctness oracle). Every algorithm routes here when the two sides'
+    key types differ in family (``int`` vs ``string``): only Catalyst's
+    coerced equi-join matches ``1`` to ``'1'``.
 
 ``index``
-    Broadcast per-key sorted arrays + ``mapInPandas`` probe (zero shuffle,
-    O(log n)/row). Build side must fit in driver/executor memory — guarded by
+    Broadcast per-key sorted arrays + ``mapInArrow`` probe (the shared
+    broadcast index of :mod:`~sequila_native_spark.operators.index`; zero
+    shuffle, O(log n)/row, any number of equi-keys). Build side must fit in
+    driver/executor memory — guarded by
     ``spark.sequila.maxBroadcastBuildRows``.
 
 ``partitioned`` (default scale path)
@@ -48,7 +52,7 @@ Algorithms:
 
 ``broadcast_probe`` (big build × small probe)
     The transpose of ``index``: broadcast the (small) PROBE side, scan the
-    build side with ``mapInPandas`` computing each batch's per-probe best
+    build side with ``mapInArrow`` computing each batch's per-probe best
     candidate (same overlap-first kernel), then reduce the candidates with a
     global ``(distance, start, end)`` argmin. The build side is never
     collected, broadcast, or shuffled — on a cluster this is a pure parquet
@@ -101,25 +105,29 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from sequila_native_spark.operators.interval_join import (
+from sequila_native_spark.operators.index import (
     _LE,
     _LS,
     _RE,
     _RS,
     BuildSideTooLargeError,
+    bounds_of,
+    collect_index,
+    index_keys_ok,
+    key_groups,
+    take_build_rows,
+)
+from sequila_native_spark.operators.interval_join import (
     _disambiguate,
     _probe_spans,
     _with_bounds,
-    compact_build_pandas,
     compact_index_arrays,
-    decompose_build,
-    guarded_build_pandas,
-    take_build_rows,
 )
 from sequila_native_spark.operators.intervals import validate_sides
 from sequila_native_spark.session import SequilaConf, parse_algorithm
@@ -235,6 +243,11 @@ def nearest_join(
 
     lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
     rb = _with_bounds(right, r_start, r_end, _RS, _RE, strict, check)
+    if not index_keys_ok(left, right, l_keys, r_keys):
+        # mixed key type families (int vs string): the broadcast index and
+        # the cogroup paths cannot match 1 to '1' — Catalyst's coerced
+        # equi-join in the naive plan can
+        algo = "naive"
 
     salt = max(1, int(conf.nearest_salt))
     if algo == "naive":
@@ -1194,28 +1207,17 @@ def _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
     """
     spark = lb.sparkSession
     left_cols = [c for c in out_cols if c in lb.columns]
-    right_cols = [c for c in out_cols if c not in lb.columns]
 
     # the collected copy and the final join branch re-evaluate the stamped
     # frame; ids agree under stamp_row_id's deterministic-lineage contract
     rbid = stamp_row_id(rb, _PID)
-    probe_pdf = guarded_build_pandas(rbid.select(*r_keys, _RS, _RE, _PID))
-    valid = probe_pdf[_RS].notna() & probe_pdf[_RE].notna()
-    for kc in r_keys:
-        valid &= probe_pdf[kc].notna()
-    probes = probe_pdf[valid]
-    probe_map: dict[tuple, tuple] = {}
-    if len(probes):
-        giter = probes.groupby(list(r_keys), sort=False) if r_keys else [((), probes)]
-        for key, grp in giter:
-            if r_keys and not isinstance(key, tuple):
-                key = (key,)
-            probe_map[key] = compact_index_arrays(
-                grp[_RS].to_numpy(np.int64),
-                grp[_RE].to_numpy(np.int64),
-                grp[_PID].to_numpy(np.int64),
-            )
-    bc = spark.sparkContext.broadcast(probe_map)
+    probe_map, probe_ids = collect_index(
+        rbid.select(*r_keys, F.col(_RS).alias(_LS), F.col(_RE).alias(_LE), _PID),
+        r_keys, compact_index_arrays, payload_cols=[_PID],
+    )
+    bc = spark.sparkContext.broadcast(
+        (probe_map, probe_ids.column(0).to_numpy(zero_copy_only=False))
+    )
 
     cand_cols = [*left_cols, _LS, _LE]
     cand_schema = StructType(
@@ -1226,28 +1228,20 @@ def _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
     )
     lk_list = list(l_keys)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pmap = bc.value
-        for pdf in batches:
-            if pdf.empty or not pmap:
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        pmap, all_pids = bc.value
+        for batch in batches:
+            if batch.num_rows == 0 or not pmap:
                 continue
-            ok = pdf[_LS].notna() & pdf[_LE].notna()
-            for kc in lk_list:
-                ok &= pdf[kc].notna()
-            bdf = pdf[ok]
-            if not len(bdf):
-                continue
-            outs = []
-            groups = bdf.groupby(lk_list, sort=False) if lk_list else [((), bdf)]
-            for key, grp in groups:
-                if lk_list and not isinstance(key, tuple):
-                    key = (key,)
+            b_starts, b_ends = bounds_of(batch, _LS, _LE)
+            for key, pos in key_groups(batch, lk_list, bounds=(_LS, _LE)):
                 entry = pmap.get(key)
                 if entry is None:
                     continue
-                qs, qe, pids = entry
+                qs, qe, rows = entry
+                pids = all_pids[rows]
                 starts, ends, runmax, argmax_first, order = _build_nearest_arrays(
-                    grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64)
+                    b_starts[pos], b_ends[pos]
                 )
                 if k == 1:
                     take = _nearest_take(starts, ends, runmax, argmax_first, qs, qe, flags)
@@ -1270,14 +1264,14 @@ def _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
                     tpids = pids[rep]
                 ls, le = starts[tk], ends[tk]
                 dist = np.where(ls > tqe, ls - tqe, np.where(le < tqs, tqs - le, 0))
-                rows = grp[cand_cols].iloc[order[tk]].reset_index(drop=True)
-                rows[_PID] = tpids
-                rows[_DIST] = dist
-                outs.append(rows)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+                rows_out = batch.select(cand_cols).take(pa.array(pos[order[tk]]))
+                yield pa.RecordBatch.from_arrays(
+                    [*rows_out.columns, pa.array(tpids, type=pa.int64()),
+                     pa.array(dist, type=pa.int64())],
+                    names=[*cand_cols, _PID, _DIST],
+                )
 
-    cands = ensure_parallel(lb, []).mapInPandas(scan, schema=cand_schema)
+    cands = ensure_parallel(lb, []).mapInArrow(scan, schema=cand_schema)
     w = Window.partitionBy(_PID).orderBy(
         F.col(_DIST).asc(), F.col(_LS).asc(), F.col(_LE).asc()
     )
@@ -1291,60 +1285,39 @@ def _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
 
 
 def _index_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
+    """Broadcast index + ``mapInArrow`` probe: one output row per probe row
+    (``k`` at most with ``k > 1``); probes with no build row in their key
+    group, or a null key or bound, get null-left padding — an Arrow ``take``
+    with null indices."""
     spark = lb.sparkSession
     left_cols = [c for c in out_cols if c in lb.columns]
     right_cols = [c for c in out_cols if c not in lb.columns]
 
-    left_pdf = guarded_build_pandas(lb)
-    valid = left_pdf[_LS].notna() & left_pdf[_LE].notna()
-    for kc in l_keys:
-        valid &= left_pdf[kc].notna()
-    build = left_pdf[valid]
-    index: dict[tuple, tuple] = {}
-    if len(build):
-        group_iter = build.groupby(list(l_keys), sort=False) if l_keys else [((), build)]
-        for key, grp in group_iter:
-            if l_keys and not isinstance(key, tuple):
-                key = (key,)
-            starts, ends, runmax, argmax_first, order = _build_nearest_arrays(
-                grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64)
-            )
-            index[key] = compact_index_arrays(
-                starts, ends, runmax, argmax_first, grp.index.to_numpy()[order]
-            )
+    def entry(s, e, rows):
+        starts, ends, runmax, argmax_first, order = _build_nearest_arrays(s, e)
+        return compact_index_arrays(starts, ends, runmax, argmax_first, rows[order])
 
-    left_out = compact_build_pandas(left_pdf[left_cols])
-    bc = spark.sparkContext.broadcast((index, left_out))
+    index, payload = collect_index(lb, l_keys, entry, payload_cols=left_cols)
+    bc = spark.sparkContext.broadcast((index, payload))
     out_schema = _nearest_out_schema(lb, rb, left_cols, right_cols)
+    names = [*left_cols, *right_cols]
     rk_list = list(r_keys)
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_map, build_pdf = bc.value
-        build_cols = decompose_build(build_pdf)  # once per task, not per batch
-        for pdf in batches:
-            if pdf.empty:
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        idx_map, build = bc.value
+        for batch in batches:
+            m = batch.num_rows
+            if m == 0:
                 continue
-            qs_all = pdf[_RS].to_numpy(np.int64, na_value=0)
-            qe_all = pdf[_RE].to_numpy(np.int64, na_value=0)
-            has_null = (pdf[_RS].isna() | pdf[_RE].isna()).to_numpy()
-            m = len(pdf)
+            qs_all, qe_all = bounds_of(batch)
             hit_probe: list[np.ndarray] = []
             hit_row: list[np.ndarray] = []
             n_hits = np.zeros(m, dtype=np.int64)
-            groups = pdf.groupby(rk_list, sort=False, dropna=False) if rk_list else [((), pdf)]
-            for key, grp in groups:
-                if rk_list and not isinstance(key, tuple):
-                    key = (key,)
-                if any(kk is None or (isinstance(kk, float) and np.isnan(kk)) for kk in key):
-                    continue
+            for key, pos in key_groups(batch, rk_list):
                 entry = idx_map.get(key)
                 if entry is None:
                     continue
                 starts, ends, runmax, argmax_first, row_idx = entry
-                pos = pdf.index.get_indexer(grp.index)
-                pos = pos[~has_null[pos]]
-                if not pos.size:
-                    continue
                 if k == 1:
                     take = _nearest_take(
                         starts, ends, runmax, argmax_first,
@@ -1369,14 +1342,16 @@ def _index_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
             # null-left padding for probe rows whose key group has no build
             # rows (integration_test.rs:385-394).
             miss = np.nonzero(n_hits == 0)[0]
-            probe_take = np.concatenate([*hit_probe, miss]) if hit_probe else miss
+            probe_take = np.concatenate([*hit_probe, miss])
             build_take = np.concatenate(
                 [*hit_row, np.full(len(miss), -1, dtype=np.int64)]
-            ) if hit_row else np.full(len(miss), -1, dtype=np.int64)
-            l_part = take_build_rows(build_cols, build_take, null_mask=build_take < 0)
-            r_part = pdf[right_cols].iloc[probe_take].reset_index(drop=True)
-            yield pd.concat([l_part, r_part], axis=1)
+            )
+            left_part = take_build_rows(build, build_take)
+            right_part = batch.select(right_cols).take(pa.array(probe_take))
+            yield pa.RecordBatch.from_arrays(
+                [*left_part.columns, *right_part.columns], names=names
+            )
 
-    # round-robin split of a single-partition probe scan: mapInPandas gets
+    # round-robin split of a single-partition probe scan: mapInArrow gets
     # real parallelism; every task shares the one broadcast build
-    return ensure_parallel(rb, []).mapInPandas(probe, schema=out_schema).select(*out_cols)
+    return ensure_parallel(rb, []).mapInArrow(probe, schema=out_schema).select(*out_cols)

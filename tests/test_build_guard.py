@@ -1,4 +1,4 @@
-"""Build-side memory guard: collect paths must never blindly toPandas().
+"""Build-side memory guard: the broadcast-index collect is never unbounded.
 
 Reference behavior is *accounted* build memory (``interval_join.rs:624-660``)
 — an over-cap build errors early or falls back to a distributed plan instead
@@ -10,10 +10,13 @@ from __future__ import annotations
 import pytest
 
 from sequila_native_spark import count_overlaps, nearest_join, overlap_join
-from sequila_native_spark.operators.interval_join import (
+from sequila_native_spark.operators.index import (
+    _LE,
+    _LS,
     BuildSideTooLargeError,
-    guarded_build_pandas,
+    collect_index,
 )
+from sequila_native_spark.operators.interval_join import _with_bounds
 from sequila_native_spark.session import MAX_BROADCAST_BUILD_ROWS
 from tests.conftest import rows_set
 
@@ -25,13 +28,22 @@ def tiny_cap(spark):
     spark.conf.unset(MAX_BROADCAST_BUILD_ROWS)
 
 
+def _collect(df):
+    lb = _with_bounds(df, "pos_start", "pos_end", _LS, _LE, False, True)
+    return collect_index(
+        lb, ["contig"], lambda s, e, rows: rows, payload_cols=["pos_start"]
+    )
+
+
 def test_guarded_collect_raises(spark, tiny_cap, reads):
     with pytest.raises(BuildSideTooLargeError, match="maxBroadcastBuildRows"):
-        guarded_build_pandas(reads)
+        _collect(reads)
 
 
-def test_guarded_collect_passes_under_cap(spark, reads):
-    assert len(guarded_build_pandas(reads.limit(2))) == 2
+def test_guarded_collect_passes_under_cap(spark, tiny_cap, reads):
+    index, payload = _collect(reads.limit(2))
+    assert payload.num_rows == 2
+    assert sum(len(rows) for rows in index.values()) == 2
 
 
 def test_overlap_index_falls_back_to_partitioned(spark, tiny_cap, reads, targets):

@@ -2,8 +2,8 @@
 
 Pins the operator's contract against its definition: bit-identical rows to
 ``overlap_join(..., algorithm="binning").groupBy(keys).count()`` across the
-keyed/keyless/strict/null/int-key/fallback shapes, including the Arrow probe
-(0/1 simple key) and the pandas fallback (multi-key)."""
+keyed/keyless/strict/null/int-key/multi-key/fallback shapes — every shape
+runs through the one Arrow build and ``mapInArrow`` probe."""
 
 from __future__ import annotations
 
@@ -75,9 +75,10 @@ def test_agg_matches_join_groupby_keyless(spark, sides):
 
 def test_agg_int_key_and_multi_key(spark, sides):
     targets, reads = sides
-    t2 = targets.withColumn("k", (F.col("t_start") % 3).cast("long"))
-    r2 = reads.withColumn("k", (F.col("r_start") % 3).cast("long"))
-    # int single key: arrow probe
+    # k is null where start % 3 == 0: a null in any key never matches
+    t2 = targets.withColumn("k", F.expr("nullif(t_start % 3, 0)").cast("long"))
+    r2 = reads.withColumn("k", F.expr("nullif(r_start % 3, 0)").cast("long"))
+    # int single key
     got = rows_set(
         overlap_count_agg(
             t2.drop("contig"), r2.drop("contig"), on="k",
@@ -93,7 +94,7 @@ def test_agg_int_key_and_multi_key(spark, sides):
     )
     want = rows_set(oj.groupBy("k").agg(F.count(F.lit(1)).cast("long").alias("n_pairs")))
     assert got == want
-    # multi key: pandas fallback path
+    # multi key
     got = rows_set(
         overlap_count_agg(
             t2, r2, on=["contig", "k"],
@@ -126,7 +127,7 @@ def test_agg_fallback_past_broadcast_guard(spark, sides):
 
 
 def test_count_overlaps_index_arrow_matches_binning_with_nulls(spark, sides):
-    """The arrow index probe (passthrough + appended count) must agree with
+    """The Arrow index probe (passthrough + appended count) must agree with
     the binning algorithm row-for-row, including null keys/bounds (count 0,
     row preserved)."""
     targets, reads = sides
